@@ -64,8 +64,8 @@ object SparkEntry {
     val files = df.inputFiles
     if (files.length >= cores) df
     else {
-      val maxSplit = sess.conf.get("spark.sql.files.maxPartitionBytes",
-        "134217728").toLong
+      // the parsed conf entry: user values may carry a size suffix ("128m")
+      val maxSplit = sess.sessionState.conf.filesMaxPartitionBytes
       val hconf = sess.sparkContext.hadoopConfiguration
       val splits = files.foldLeft(0L) { (acc, f) =>
         val p = new org.apache.hadoop.fs.Path(f)
@@ -559,7 +559,7 @@ object SparkEntry {
       }
       val schema = s.read.parquet(dir).schema
       // windowed-state sizing: a few thousand (window, type) keys —
-      // 8 state partitions, not the batch default of 32 (each is a
+      // 4 state partitions, not the batch default of 32 (each is a
       // per-micro-batch state-store commit)
       val qname = "v_stream_window_sink"
       withShufflePartitions(s, 4) {
@@ -618,7 +618,8 @@ object SparkEntry {
       }
       val schema = s.read.parquet(dir).schema
       val qname = "v_stream_dedup_sink"
-      // ~500 digest keys: size the state store to the keyspace
+      // ~500 digest keys: 4 state partitions, sized to the keyspace (each
+      // is a per-micro-batch state-store commit)
       withShufflePartitions(s, 4) {
         val stream = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "2").parquet(dir)

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   * throughput (files/sec) at both plus the scaling efficiency
   * (throughput@4N / throughput@N) / 4, target ≥ 0.8.
   *
-  * The measured job is the full engine pass: row-rule violations +
-  * sha256 invariant, uniqueness on (repo,path,commit), referential
-  * anti-join vs the manifest, per-column profile (HLL mode), and the KS
-  * drift check — i.e. everything the engine does per snapshot.
+  * The measured job is the full engine pass ([[validatePass]]): row-rule
+  * violations + sha256 invariant, uniqueness on (repo,path,commit),
+  * referential check vs the manifest, per-column profile (HLL mode),
+  * and the KS drift check, in two scans.
   *
   * Usage: runMain graft.bench.ScalingBench [sfDir] [replication]
   * Writes BENCH/BASELINE.md and prints one JSON line.
@@ -77,28 +77,21 @@ object ScalingBench {
     path
   }
 
-  /** The measured validation pass. Returns total rows validated and
-    * per-phase wall seconds. */
+  /** Profiled columns of the validation pass: the fixed input shape. */
+  private val ProfileCols = Seq("repo", "path", "commit", "lang", "content")
+
+  /** The measured validation pass: [[ValidationEngine.run]] with the
+    * full FileRules set — every row rule (sha256 invariant included),
+    * uniqueness on (repo, path, commit), the referential check against
+    * the manifest, the HLL-mode column profile and KS drift of the
+    * content length, even `doc_id`s as the baseline. That is two scans
+    * and two main jobs. Returns the rows validated and the wall seconds
+    * of the two jobs, `rows` and `keys`. */
   def validatePass(spark: SparkSession, filesPath: String): (Long, Seq[(String, Double)]) = {
-    val files = spark.read.parquet(filesPath)
-    val manifest = spark.read.parquet(s"$filesPath.manifest")
-    val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def phase[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      phases += name -> (System.nanoTime() - t0) / 1e9
-      r
-    }
-    val n = phase("count")(files.count())
-    phase("violations")(Violations.extract(files, FileRules.rowRules).count())
-    phase("uniqueness")(Uniqueness.duplicates(files, FileRules.unique.columns).count())
-    phase("referential")(Referential.orphansKnownSize(files, manifest,
-      "repo", "repo", broadcastDim = true).count())
-    phase("profile")(ProfileSinglePass.columns(files,
-      Seq("repo", "path", "commit", "lang", "content")).collect())
-    phase("drift")(DriftCheck.ks(files, length(col("content")), col("doc_id") % 2 === 0,
-      FileRules.drift.bucketWidth).collect())
-    (n, phases.toSeq)
+    val r = ValidationEngine.run(spark.read.parquet(filesPath),
+      spark.read.parquet(s"$filesPath.manifest"), FileRules.all, ProfileCols,
+      col("doc_id") % 2 === 0)
+    (r.rows, r.phases)
   }
 
   /** Deduplication corpus: `rep` copies per seed doc, each copy made
@@ -188,31 +181,37 @@ object ScalingBench {
     s
   }
 
-  /** In-process measurement: warm-up pass, then `iters` passes; report
-    * the fastest (least-noise) with its phase breakdown. */
+  /** One measured pass: wall seconds and the pass's own phase seconds. */
+  type Timing = (Double, Seq[(String, Double)])
+
+  /** In-process measurement: warm-up pass, then `iters` passes; returns
+    * the rows and every measured pass, and logs the fastest
+    * (least-noise) with its phase breakdown. */
   def timed(cores: Int, filesPath: String, iters: Int = 4,
-      job: String = "validate"): (Long, Double) = {
+      job: String = "validate"): (Long, Seq[Timing]) = {
     val spark = session(cores)
     try {
       pass(job, spark, filesPath) // warm-up: JIT + codegen + file listing
       val runs = (1 to iters).map { _ =>
         val t0 = System.nanoTime()
         val (n, phases) = pass(job, spark, filesPath)
-        (n, (System.nanoTime() - t0) / 1e9, phases)
+        (n, ((System.nanoTime() - t0) / 1e9, phases))
       }
-      val (n, dt, phases) = runs.minBy(_._2)
+      val (dt, phases) = runs.map(_._2).minBy(_._1)
       System.err.println(s"[scaling:$job] local[$cores] best=${dt}s of " +
-        runs.map(r => f"${r._2}%.2f").mkString("/") + " " +
+        runs.map(r => f"${r._2._1}%.2f").mkString("/") + " " +
         phases.map { case (k, v) => f"$k=$v%.2f" }.mkString(" "))
-      (n, dt)
+      (runs.head._1, runs.map(_._2))
     } finally spark.stop()
   }
 
   /** Run one level in a freshly forked JVM (isolates JIT/codegen-cache/GC
     * state between levels — sequential sessions in one JVM showed multi-x
-    * run-to-run variance). Child prints `RESULT n sec`. */
+    * run-to-run variance). Child prints one `PASS sec phase=sec…` line
+    * per measured pass and then `RESULT n`; returns the rows, the
+    * fastest pass's seconds and every pass. */
   def forkLevel(cores: Int, filesPath: String, job: String = "validate",
-      iters: Int = 4): (Long, Double) = {
+      iters: Int = 4): (Long, Double, Seq[Timing]) = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val addOpens = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
@@ -243,19 +242,36 @@ object ScalingBench {
     while (line != null) { out.append(line).append('\n'); line = reader.readLine() }
     proc.waitFor()
     errDrain.join()
-    val r = out.toString.linesIterator.find(_.startsWith("RESULT "))
+    val lines = out.toString.linesIterator.toSeq
+    val r = lines.find(_.startsWith("RESULT "))
       .getOrElse(sys.error(s"child failed:\n$out"))
-    val Array(_, n, sec) = r.split(" ")
-    (n.toLong, sec.toDouble)
+    val passes = lines.filter(_.startsWith("PASS ")).map { l =>
+      val f = l.split(" ").toSeq.tail
+      (f.head.toDouble, f.tail.map { kv =>
+        val Array(k, v) = kv.split("=")
+        k -> v.toDouble
+      })
+    }
+    (r.split(" ")(1).toLong, passes.map(_._1).min, passes)
   }
+
+  /** `[{"sec":…,"<phase>":…,…},…]`: the passes of one level. */
+  private def passesJson(passes: Seq[Timing]): String =
+    passes.map { case (sec, phases) =>
+      (f""""sec":$sec%.3f""" +: phases.map { case (k, v) => f""""$k":$v%.3f""" })
+        .mkString("{", ",", "}")
+    }.mkString("[", ",", "]")
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // f"%.2f" JSON must not localize
     if (args.headOption.contains("--single")) {
-      val (n, dt) = timed(args(1).toInt, args(2),
+      val (n, passes) = timed(args(1).toInt, args(2),
         iters = args.lift(4).map(_.toInt).getOrElse(4),
         job = args.lift(3).getOrElse("validate"))
-      println(s"RESULT $n $dt")
+      passes.foreach { case (sec, phases) =>
+        println((s"PASS $sec" +: phases.map { case (k, v) => s"$k=$v" }).mkString(" "))
+      }
+      println(s"RESULT $n")
       return
     }
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -289,8 +305,8 @@ object ScalingBench {
       (forkLevel(loCores, filesPath, job, iters),
         forkLevel(hiCores, filesPath, job, iters))
     }
-    val (n1, t1) = results.map(_._1).minBy(_._2)
-    val (n2, t2) = results.map(_._2).minBy(_._2)
+    val (n1, t1, _) = results.map(_._1).minBy(_._2)
+    val (n2, t2, _) = results.map(_._2).minBy(_._2)
     require(n1 == n2)
     val (thr1, thr2) = (n1 / t1, n2 / t2)
     val eff = (thr2 / thr1) / (hiCores.toDouble / loCores)
@@ -298,13 +314,16 @@ object ScalingBench {
       f"""{"metric":"scaling_$job","files":$n1,"sf":"$sfDir","rep":$rep,""" +
         f""""cores_lo":$loCores,"cores_hi":$hiCores,""" +
         f""""throughput_lo":$thr1%.1f,"throughput_hi":$thr2%.1f,""" +
-        f""""sec_lo":$t1%.2f,"sec_hi":$t2%.2f,"scaling_efficiency":$eff%.3f}"""
+        f""""sec_lo":$t1%.2f,"sec_hi":$t2%.2f,"scaling_efficiency":$eff%.3f,""" +
+        s""""passes_lo":${passesJson(results.flatMap(_._1._3))},""" +
+        s""""passes_hi":${passesJson(results.flatMap(_._2._3))}}"""
     println(json)
     val jobDescr = job match {
       case "validate" =>
-        """Job: full validation pass (row-rule violations + sha256 invariant,
-          |uniqueness on (repo,path,commit), referential anti-join, per-column
-          |profile in HLL mode, KS drift)""".stripMargin
+        """Job: full validation pass, ValidationEngine.run (row-rule violations +
+          |sha256 invariant and the HLL-mode column profile in one aggregate
+          |job `rows`; uniqueness on (repo,path,commit), referential check and
+          |KS drift in one keyed job `keys`)""".stripMargin
       case _ =>
         """Job: dedup pipeline pass (exact digest dedup, 64-bit SimHash banded
           |pairing, then word shingles → MinHash signatures → banded LSH

@@ -143,7 +143,12 @@ object Dedup {
     * quadratically inside buckets. The banding generalizes unchanged to
     * wider signatures (64-bit simhash + 8-bit bands is the production
     * shape); 16 bits is kept here because the oracle replays each bit
-    * test in SQL. */
+    * test in SQL.
+    *
+    * Precondition: `idCol` is unique (one row per id). Each pair is
+    * emitted exactly once only under that precondition; a repeated id
+    * emits its pairs once per copy. Make the ids unique first when they
+    * may repeat. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     val bands = maxHamming + 1
@@ -221,7 +226,10 @@ object Dedup {
     * upstream, add bands with multiprobe, or cap buckets. Backed by the
     * codegen'd [[graft.expr.SimHash64]]; not DuckDB-replayable
     * (wrapping u64 arithmetic), so verified in ScalaTest against the
-    * all-pairs form instead of the oracle. */
+    * all-pairs form instead of the oracle.
+    *
+    * Precondition: `idCol` is unique, as for [[simhashPairs]]; exactly-
+    * once pair emission relies on one row per id. */
   def simhashPairs64(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     val bands = maxHamming + 1

@@ -4,7 +4,7 @@ import graft.rules._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** The validation core: re-expresses sifter's `objectValidate` per-row
   * check (transform/object_validate.go:31-87) and `graphcheck`'s
@@ -220,9 +220,11 @@ object Profile {
   private[validate] def sqlStr(s: String): String =
     "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-  def columns(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
-    require(cols.nonEmpty, "profile needs at least one column")
-    val aggs = cols.flatMap { c =>
+  /** The per-column aggregates of [[columns]], four per column in
+    * `cols` order: non-null count, distinct count, min and max length.
+    * [[ValidationEngine]] folds the same list into its rows job. */
+  def aggregates(cols: Seq[String], exact: Boolean): Seq[Column] =
+    cols.flatMap { c =>
       Seq(
         count(col(bq(c))).as(s"${c}__nn"),
         // rsd 0.05 (Spark default): rsd 0.01 needs 2^14 HLL registers,
@@ -233,7 +235,10 @@ object Profile {
         min(length(col(bq(c)))).cast(LongType).as(s"${c}__minl"),
         max(length(col(bq(c)))).cast(LongType).as(s"${c}__maxl"))
     }
-    val row = df.agg(count(lit(1)).as("__n"), aggs: _*)
+
+  def columns(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
+    require(cols.nonEmpty, "profile needs at least one column")
+    val row = df.agg(count(lit(1)).as("__n"), aggregates(cols, exact): _*)
     // identifiers/literals are quoted into the stack expr — a column
     // named `content-type` or `a.b` must not parse as arithmetic/field
     // access (lengthQuantiles documents the same hazard)
@@ -319,29 +324,60 @@ object LengthHistogram {
 }
 
 /** Two-sample Kolmogorov–Smirnov distance over a bucketed numeric
-  * derivation, computed from one aggregation pass: histogram per side →
-  * CDFs → max |ΔCDF|. The post-aggregation windows run over the tiny
-  * histogram (≤ a few hundred buckets), so the single-partition window
-  * is deliberate, not a scale bug.
+  * derivation: one aggregation pass builds the per-side [[histogram]]
+  * (a few hundred rows at most), the driver collects it and
+  * [[ksFromHistogram]] reduces it to the statistic.
+  * [[ValidationEngine.run]] builds the same histogram inside its keys
+  * job and goes through the same reduction, so the two agree bit for
+  * bit.
   */
 object DriftCheck {
-  def ks(df: DataFrame, value: Column, baseline: Column, bucketWidth: Int): DataFrame = {
-    val hist = df
-      .select(floor(value / bucketWidth).cast(LongType).as("bucket"),
+  /** The drift bucket of a numeric value: `floor(value / width)`; null
+    * for a null value. */
+  def bucket(value: Column, bucketWidth: Int): Column =
+    floor(value / bucketWidth).cast(LongType)
+
+  /** `(bucket, c0, c1)`: baseline and other row counts per bucket. Null
+    * values carry no bucket (same rule as LengthHistogram) — a null
+    * bucket would sort first and skew the CDF into measuring null-rate
+    * difference instead of distribution drift. */
+  def histogram(df: DataFrame, value: Column, baseline: Column,
+      bucketWidth: Int): DataFrame =
+    // a null selector is not baseline
+    df.select(bucket(value, bucketWidth).as("bucket"),
         when(baseline, 1L).otherwise(0L).as("is_base"))
-      // null values carry no bucket (same rule as LengthHistogram) —
-      // a null bucket would sort first and skew the CDF into measuring
-      // null-rate difference instead of distribution drift
       .filter(col("bucket").isNotNull)
       .groupBy(col("bucket"))
       .agg(sum(col("is_base")).as("c0"), sum(lit(1L) - col("is_base")).as("c1"))
-    val cum = Window.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val all = Window.partitionBy().rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    hist
-      .select(
-        (sum(col("c0")).over(cum).cast(DoubleType) / sum(col("c0")).over(all)).as("cdf0"),
-        (sum(col("c1")).over(cum).cast(DoubleType) / sum(col("c1")).over(all)).as("cdf1"))
-      .agg(round(max(abs(col("cdf0") - col("cdf1"))), 9).as("ks_stat"))
+
+  /** One-row `ks_stat` frame. Runs the histogram job when called; the
+    * statistic is null when either side has no bucketed rows. */
+  def ks(df: DataFrame, value: Column, baseline: Column, bucketWidth: Int): DataFrame = {
+    val hist = histogram(df, value, baseline, bucketWidth).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val stat: java.lang.Double = ksFromHistogram(hist).map(Double.box).orNull
+    df.sparkSession.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(stat)),
+      StructType(Seq(StructField("ks_stat", DoubleType))))
+  }
+
+  /** KS distance from `(bucket, c0, c1)` rows in any order, with the
+    * arithmetic of the SQL form: each side's CDF is its running count
+    * over its total as doubles, the distance is max |cdf0 - cdf1|,
+    * rounded half-up to 9 digits from the shortest decimal form of the
+    * double (what Spark's `round(x, 9)` does). None when the histogram
+    * is empty or one side has no rows. */
+  def ksFromHistogram(hist: Seq[(Long, Long, Long)]): Option[Double] = {
+    val (t0, t1) = (hist.map(_._2).sum, hist.map(_._3).sum)
+    if (t0 == 0 || t1 == 0) None
+    else {
+      val sorted = hist.sortBy(_._1)
+      val cdf0 = sorted.scanLeft(0L)(_ + _._2).tail.map(_.toDouble / t0)
+      val cdf1 = sorted.scanLeft(0L)(_ + _._3).tail.map(_.toDouble / t1)
+      val d = cdf0.zip(cdf1).map { case (a, b) => math.abs(a - b) }.max
+      Some(java.math.BigDecimal.valueOf(d)
+        .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue)
+    }
   }
 
   /** Population stability index over the same bucketed histogram as
@@ -352,14 +388,8 @@ object DriftCheck {
     * a tiny histogram reduction, same scale shape as [[ks]]. */
   def psi(df: DataFrame, value: Column, baseline: Column, bucketWidth: Int,
       eps: Double = 1e-6): DataFrame = {
-    val hist = df
-      .select(floor(value / bucketWidth).cast(LongType).as("bucket"),
-        when(baseline, 1L).otherwise(0L).as("is_base"))
-      .filter(col("bucket").isNotNull) // same null rule as ks
-      .groupBy(col("bucket"))
-      .agg(sum(col("is_base")).as("c0"), sum(lit(1L) - col("is_base")).as("c1"))
     val all = Window.partitionBy().rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    hist
+    histogram(df, value, baseline, bucketWidth)
       .select(
         greatest(col("c0").cast(DoubleType) / sum(col("c0")).over(all), lit(eps)).as("p0"),
         greatest(col("c1").cast(DoubleType) / sum(col("c1")).over(all), lit(eps)).as("p1"))
@@ -439,5 +469,147 @@ object Verdicts {
       .select(col("part"), col("rule_id"),
         coalesce(col("n"), lit(0L)).cast(LongType).as("violation_count"),
         (coalesce(col("n"), lit(0L)) === 0L).as("pass"))
+  }
+}
+
+/** The whole north-rule check of one table in two scans and two main
+  * jobs, with the results of the public functions it replaces:
+  *
+  *  - '''rows job''': one global aggregate over `files` — the row
+  *    count, the failing-row count of every [[RowRule]] (what
+  *    [[Violations.extract]] grouped by `rule_id` counts) and
+  *    [[Profile.aggregates]] in HLL mode (what
+  *    `Profile.columns(exact = false)` returns);
+  *  - '''keys job''': one scan of `files`, each row exploded into
+  *    tagged records that all go through one `groupBy(tag, keys…)`:
+  *    tag 0 is the [[Unique]] key ([[Uniqueness.duplicates]]), tags 1
+  *    and 3 the [[Drift]] bucket of a baseline and of another row
+  *    ([[DriftCheck.histogram]]), tag 2 the non-null [[RefIntegrity]]
+  *    value. The grouped rows keep the duplicate keys, the buckets and
+  *    the distinct reference values; a broadcast anti-join against the
+  *    manifest keys then drops the values the manifest holds, leaving
+  *    the orphans ([[Referential.orphansKnownSize]]). The join runs on
+  *    the few grouped rows, not per row, and needs no distinct on the
+  *    manifest. A second, tiny aggregate in the same job reduces the
+  *    result to one row per tag and per bucket, so the driver receives
+  *    O(rules + columns + buckets) values, never O(rows) or
+  *    O(duplicate groups).
+  *
+  * Null semantics are those of the functions replaced:
+  *  - a NULL in a uniqueness key is a value like any other: rows whose
+  *    keys are equal or both NULL column by column group together, so
+  *    two rows `(NULL, p, c)` are a duplicate group;
+  *  - a NULL drift value has no bucket and counts on neither side of
+  *    the KS statistic;
+  *  - a NULL reference value is a missing value, which the Required
+  *    rule reports, not an orphan;
+  *  - a row rule whose pass predicate is NULL on a row does not count
+  *    that row as a violation.
+  */
+object ValidationEngine {
+
+  /** Outcome of [[run]]. `violations` holds every row rule id, zero
+    * counts included; `ks` is None when a drift side has no rows;
+    * `phases` holds the wall seconds of the `rows` and `keys` jobs. */
+  final case class Report(
+      rows: Long,
+      violations: Map[String, Long],
+      duplicateGroups: Long,
+      duplicateRows: Long,
+      orphanKeys: Long,
+      orphanRows: Long,
+      profile: Seq[graft.model.ColumnProfile],
+      ks: Option[Double],
+      phases: Seq[(String, Double)])
+
+  /** Check `files` against `rules`: its row rules plus exactly one
+    * [[Unique]], one [[RefIntegrity]] (whose `refKey` is read from
+    * `manifest`) and one [[Drift]], whose value is the length of its
+    * column. `profileCols` are the profiled columns, `baseline` selects
+    * the drift baseline rows. */
+  def run(files: DataFrame, manifest: DataFrame, rules: Seq[Rule],
+      profileCols: Seq[String], baseline: Column): Report = {
+    def one[R <: Rule](rs: Seq[R], kind: String): R = {
+      require(rs.size == 1, s"the engine needs exactly one $kind rule, got ${rs.size}")
+      rs.head
+    }
+    val rowRules = rules.collect { case r: RowRule => r }
+    val unique = one(rules.collect { case r: Unique => r }, "Unique")
+    val ref = one(rules.collect { case r: RefIntegrity => r }, "RefIntegrity")
+    val drift = one(rules.collect { case r: Drift => r }, "Drift")
+
+    val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    def phase[A](name: String)(f: => A): A = {
+      val t0 = System.nanoTime()
+      val r = f
+      phases += name -> (System.nanoTime() - t0) / 1e9
+      r
+    }
+
+    val agg = phase("rows")(files.agg(count(lit(1)),
+      rowRules.map(r => count(when(!r.pass, true))) ++
+        Profile.aggregates(profileCols, exact = false): _*).head())
+    val rows = agg.getLong(0)
+    val violations = rowRules.indices
+      .groupMapReduce(i => rowRules(i).id)(i => agg.getLong(1 + i))(_ + _)
+    val profile = profileCols.zipWithIndex.map { case (c, i) =>
+      val at = 1 + rowRules.size + 4 * i
+      def len(j: Int) = if (agg.isNullAt(j)) None else Some(agg.getLong(j))
+      graft.model.ColumnProfile(c, rows, rows - agg.getLong(at), agg.getLong(at + 1),
+        len(at + 2), len(at + 3))
+    }
+
+    val manifestKeys = broadcast(
+      manifest.select(col(Profile.bq(ref.refKey)).as("__ref_key")))
+    val records = keyRecords(files, unique, ref, drift, baseline)
+    val summary = phase("keys")(records
+      .groupBy(records.columns.toSeq.map(col): _*)
+      .agg(count(lit(1)).as("n"))
+      .filter(col("tag") =!= 0 || col("n") > 1) // tag 0: duplicate groups only
+      .join(manifestKeys, col("ref") === col("__ref_key") && col("tag") === 2, "left_anti")
+      .groupBy(col("tag"), col("bucket"))
+      .agg(count(lit(1)).as("groups"), sum(col("n")).as("n"))
+      .collect())
+    def totals(tag: Int): (Long, Long) =
+      summary.find(_.getInt(0) == tag).fold((0L, 0L))(r => (r.getLong(2), r.getLong(3)))
+    val (dupGroups, dupRows) = totals(0)
+    val (orphanKeys, orphanRows) = totals(2)
+    def side(tag: Int): Map[Long, Long] =
+      summary.filter(_.getInt(0) == tag).map(r => r.getLong(1) -> r.getLong(3)).toMap
+    val (base, other) = (side(1), side(3))
+    val hist = (base.keySet ++ other.keySet).toSeq
+      .map(b => (b, base.getOrElse(b, 0L), other.getOrElse(b, 0L)))
+
+    Report(rows, violations, dupGroups, dupRows, orphanKeys, orphanRows, profile,
+      DriftCheck.ksFromHistogram(hist), phases.toSeq)
+  }
+
+  /** The tagged `(u0…, tag, bucket, ref)` records of the keys job: the
+    * `u` fields hold the uniqueness key on tag 0, `bucket` the drift
+    * bucket of a baseline row on tag 1 and of another row on tag 3,
+    * `ref` the reference value on tag 2; the other fields are NULL.
+    * The shuffle carries one tag-0 record per row, so the records hold
+    * no field the groupBy does not need, and the fields that are
+    * constant on tag 0 come last, where they compress as one run. */
+  private def keyRecords(files: DataFrame, unique: Unique, ref: RefIntegrity,
+      drift: Drift, baseline: Column): DataFrame = {
+    def nullOf(c: String) = lit(null).cast(files.schema(c).dataType)
+    def rec(tag: Column, keys: Seq[Column], bucket: Column, refValue: Column): Column =
+      struct(keys.zipWithIndex.map { case (k, i) => k.as(s"u$i") } :+ tag.as("tag") :+
+        bucket.as("bucket") :+ refValue.as("ref"): _*)
+    val noKeys = unique.columns.map(nullOf)
+    val noBucket = lit(null).cast(LongType)
+    val refCol = col(Profile.bq(ref.column))
+    val bucket = DriftCheck.bucket(length(col(Profile.bq(drift.column))), drift.bucketWidth)
+    files
+      .select(explode(array(
+        rec(lit(0), unique.columns.map(c => col(Profile.bq(c))), noBucket,
+          nullOf(ref.column)),
+        when(bucket.isNotNull, rec(when(baseline, lit(1)).otherwise(lit(3)), noKeys, bucket,
+          nullOf(ref.column))),
+        when(refCol.isNotNull, rec(lit(2), noKeys, noBucket, refCol))
+      )).as("r"))
+      .filter(col("r").isNotNull)
+      .select("r.*")
   }
 }

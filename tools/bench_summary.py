@@ -42,10 +42,11 @@ def main():
         f"- **{n} queries, total {total:.1f}s** at `{cur.get('sf', '?')}`; "
         f"errors {cur.get('errors', [])}, flaky {cur.get('flaky', [])}, "
         f"recall {cur.get('recall', {})}.")
-    if sent:
+    if (sent and drift is not None and sent.get('min') is not None
+            and sent.get('spread') is not None):
         lines.append(
-            f"- Tenancy sentinel: min {sent.get('min'):.3f}s, within-run "
-            f"spread {sent.get('spread'):.2f}x -> **drift {drift:.3f}** "
+            f"- Tenancy sentinel: min {sent['min']:.3f}s, within-run "
+            f"spread {sent['spread']:.2f}x -> **drift {drift:.3f}** "
             f"(1.0 = the round-7 calibration host state; <1 = faster host).")
     if prev:
         ptotal = prev["value"]
